@@ -178,21 +178,7 @@ def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 15k footprints ~ a few MB exploded: broadcast kills the probe-side
     # shuffle entirely (the shuffle path, default, is the 10^12-scale plan)
     return joins.pip_join(
-        pts, polys, WORLD_GRID, strategy="expr", broadcast_polygons=True
-    ).select("pt_id", "fp_id")
-
-
-def q_pip_join_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same join, vectorized numpy ray-cast in mapInPandas (Arrow batches)."""
-    pts = derived.points_meta(spark, sf_dir)
-    polys = derived.footprint_rings(spark, sf_dir).join(
-        derived.footprints_with_env(spark, sf_dir).select(
-            "fp_id", "minx", "miny", "maxx", "maxy"
-        ),
-        "fp_id",
-    )
-    return joins.pip_join(
-        pts, polys, WORLD_GRID, strategy="arrow", broadcast_polygons=True
+        pts, polys, WORLD_GRID, broadcast_polygons=True
     ).select("pt_id", "fp_id")
 
 
@@ -2326,7 +2312,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "bbox_join": q_bbox_join,
     "point_tile_assign": q_point_tile_assign,
     "pip_join": q_pip_join,
-    "pip_join_arrow": q_pip_join_arrow,
     "knn_join": q_knn_join,
     "training_tensors": q_training_tensors,
     "edt_weight_hist": q_edt_weight_hist,
@@ -2405,7 +2390,6 @@ SELECT
 FROM images_meta""",
         ),
         "pip_join": _PIP_SQL,
-        "pip_join_arrow": _PIP_SQL,
         "pipeline_polygons": _pipeline_polygons_sql(),
         "pipeline_watershed": _pipeline_watershed_sql(),
         "dice_jaccard": _dice_jaccard_sql(),
@@ -3633,9 +3617,11 @@ WITH polys AS (
 )
 SELECT CAST(3 AS INT) AS z, CAST(tx AS INT) AS tx, CAST(ty AS INT) AS ty,
        COUNT(*) AS n_features, COUNT(*) AS n_rings,
-       4*COUNT(*) AS n_vertices, SUM(pk) AS sum_id,
-       SUM(2*(qxl + qxr)) AS sum_qx, SUM(2*(qyt + qyb)) AS sum_qy,
-       SUM(2*(qxr - qxl)*(qyb - qyt)) AS sum_area2, SUM(value) AS sum_value
+       4*COUNT(*) AS n_vertices, CAST(SUM(pk) AS BIGINT) AS sum_id,
+       CAST(SUM(2*(qxl + qxr)) AS BIGINT) AS sum_qx,
+       CAST(SUM(2*(qyt + qyb)) AS BIGINT) AS sum_qy,
+       CAST(SUM(2*(qxr - qxl)*(qyb - qyt)) AS BIGINT) AS sum_area2,
+       CAST(SUM(value) AS BIGINT) AS sum_value
 FROM q WHERE qxr > qxl AND qyb > qyt
 GROUP BY tx, ty"""
 
@@ -3675,9 +3661,11 @@ WITH polys AS (
 )
 SELECT CAST(z AS INT) AS z, CAST(tx AS INT) AS tx, CAST(ty AS INT) AS ty,
        COUNT(*) AS n_features, COUNT(*) AS n_rings,
-       4*COUNT(*) AS n_vertices, SUM(pk) AS sum_id,
-       SUM(2*(qxl + qxr)) AS sum_qx, SUM(2*(qyt + qyb)) AS sum_qy,
-       SUM(2*(qxr - qxl)*(qyb - qyt)) AS sum_area2, SUM(value) AS sum_value
+       4*COUNT(*) AS n_vertices, CAST(SUM(pk) AS BIGINT) AS sum_id,
+       CAST(SUM(2*(qxl + qxr)) AS BIGINT) AS sum_qx,
+       CAST(SUM(2*(qyt + qyb)) AS BIGINT) AS sum_qy,
+       CAST(SUM(2*(qxr - qxl)*(qyb - qyt)) AS BIGINT) AS sum_area2,
+       CAST(SUM(value) AS BIGINT) AS sum_value
 FROM q WHERE qxr > qxl AND qyb > qyt
 GROUP BY z, tx, ty"""
 
@@ -3733,9 +3721,10 @@ WITH segs AS (
 )
 SELECT CAST(3 AS INT) AS z, CAST(tx AS INT) AS tx, CAST(ty AS INT) AS ty,
        COUNT(*) AS n_features, COUNT(*) AS n_rings,
-       2*COUNT(*) AS n_vertices, SUM(pk) AS sum_id,
-       SUM(q1x + q2x) AS sum_qx, SUM(q1y + q2y) AS sum_qy,
-       CAST(0 AS BIGINT) AS sum_area2, SUM(value) AS sum_value
+       2*COUNT(*) AS n_vertices, CAST(SUM(pk) AS BIGINT) AS sum_id,
+       CAST(SUM(q1x + q2x) AS BIGINT) AS sum_qx,
+       CAST(SUM(q1y + q2y) AS BIGINT) AS sum_qy,
+       CAST(0 AS BIGINT) AS sum_area2, CAST(SUM(value) AS BIGINT) AS sum_value
 FROM q
 WHERE (horiz AND q2x > q1x) OR (NOT horiz AND q2y > q1y)
 GROUP BY tx, ty"""
@@ -3873,7 +3862,8 @@ def _audio_adpcm_sql() -> str:
     chain (tools/build_adpcm_fixture.py) — no Spark machinery shared, so
     a distributed-plumbing bug cannot cancel out."""
     return f"""
-SELECT audio_id, n_samples, n_channels, sample_rate,
+SELECT audio_id, n_samples, CAST(n_channels AS INT) AS n_channels,
+       CAST(sample_rate AS INT) AS sample_rate,
        duration_ms, sum_abs, zero_crossings
 FROM read_parquet('{_AUDIO_ADPCM_FIXTURE}')"""
 
@@ -3885,7 +3875,8 @@ def _mp3_audio_sql() -> str:
     (tools/build_mp3_fixture.py) — no Spark machinery shared, so a
     distributed-plumbing bug cannot cancel out."""
     return f"""
-SELECT audio_id, n_samples, n_channels, sample_rate,
+SELECT audio_id, n_samples, CAST(n_channels AS INT) AS n_channels,
+       CAST(sample_rate AS INT) AS sample_rate,
        duration_ms, sum_abs, zero_crossings
 FROM read_parquet('{_MP3_AUDIO_FIXTURE}')"""
 
@@ -3895,7 +3886,8 @@ def _mp3_audio_l2_sql() -> str:
     the same single-process fixture run (tools/build_mp3_fixture.py ::
     mp3_l2_signal) — no Spark machinery shared with the gated query."""
     return f"""
-SELECT audio_id, n_samples, n_channels, sample_rate,
+SELECT audio_id, n_samples, CAST(n_channels AS INT) AS n_channels,
+       CAST(sample_rate AS INT) AS sample_rate,
        duration_ms, sum_abs, zero_crossings
 FROM read_parquet('{_MP3_AUDIO_L2_FIXTURE}')"""
 
@@ -3906,7 +3898,8 @@ def _mp3_audio_l3_sql() -> str:
     :: mp3_l3_signal) — no Spark machinery shared with the gated
     query."""
     return f"""
-SELECT audio_id, n_samples, n_channels, sample_rate,
+SELECT audio_id, n_samples, CAST(n_channels AS INT) AS n_channels,
+       CAST(sample_rate AS INT) AS sample_rate,
        duration_ms, sum_abs, zero_crossings
 FROM read_parquet('{_MP3_AUDIO_L3_FIXTURE}')"""
 
@@ -4004,8 +3997,8 @@ def _mvt_points_sql() -> str:
 )
 SELECT CAST(3 AS INT) AS z, CAST(tx AS INT) AS tx, CAST(ty AS INT) AS ty,
        COUNT(*) AS n_features, COUNT(*) AS n_rings,
-       COUNT(*) AS n_vertices, SUM(pt_id) AS sum_id,
-       SUM(qx) AS sum_qx, SUM(qy) AS sum_qy,
+       COUNT(*) AS n_vertices, CAST(SUM(pt_id) AS BIGINT) AS sum_id,
+       CAST(SUM(qx) AS BIGINT) AS sum_qx, CAST(SUM(qy) AS BIGINT) AS sum_qy,
        CAST(0 AS BIGINT) AS sum_area2, CAST(0 AS BIGINT) AS sum_value
 FROM qq GROUP BY tx, ty""",
     )

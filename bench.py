@@ -6,7 +6,7 @@ parallelism scaling study (local[N] vs local[4N]) standing in for the
 N -> 4N executor requirement — no real cluster exists in this sandbox.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default os.cpu_count(), the host's cores),
      SPARK_GRAFT_BENCH_SCALING=0 to skip the scaling study.
 """
 
@@ -20,7 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 RUN_SCALING = os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0"
 
 
@@ -136,7 +136,6 @@ def main() -> None:
         "gen_tiles",
         "point_tile_assign",
         "pip_join",
-        "pip_join_arrow",
         "bbox_join",
         "knn_join",
         "pipeline_polygons",

@@ -62,13 +62,9 @@ def geo(spark):
     return pts, polys, pdf, gdf
 
 
-@pytest.mark.parametrize("strategy", ["expr", "arrow"])
-def test_pip_join_vs_bruteforce(spark, geo, strategy):
+def test_pip_join_vs_bruteforce(spark, geo):
     pts, polys, pdf, gdf = geo
-    got = {
-        (r["pt_id"], r["fp_id"])
-        for r in joins.pip_join(pdf, gdf, GRID, strategy=strategy).collect()
-    }
+    got = {(r["pt_id"], r["fp_id"]) for r in joins.pip_join(pdf, gdf, GRID).collect()}
     exp = {
         (pid, fid)
         for pid, px, py in pts
@@ -102,17 +98,30 @@ def test_bbox_range_join_vs_bruteforce_and_exactly_once(spark, geo):
     assert set(pairs) == exp
 
 
-@pytest.mark.parametrize("k", [1, 3, 7])
-def test_knn_join_vs_bruteforce(spark, geo, k):
+@pytest.mark.parametrize(
+    "k, n_pts",
+    # 400 points vs 40 centers: round one explodes the k-ring on the center
+    # side; 10 points vs 40 centers: it explodes on the point side
+    [
+        pytest.param(1, 400, id="1"),
+        pytest.param(3, 400, id="3"),
+        pytest.param(7, 400, id="7"),
+        pytest.param(3, 10, id="3-fewer-points"),
+    ],
+)
+def test_knn_join_vs_bruteforce(spark, geo, k, n_pts):
     pts, polys, pdf, gdf = geo
+    pts = pts[:n_pts]
     centers = spark.createDataFrame(
         [(fid, (mnx + mxx) / 2, (mny + mxy) / 2) for fid, _, mnx, mny, mxx, mxy in polys],
         "fp_id string, cx double, cy double",
     )
+    pdf = spark.createDataFrame(pts, pdf.schema)
     got = joins.knn_join(pdf, centers, GRID, k=k, r0=1).collect()
     by_pt = {}
     for r in got:
         by_pt.setdefault(r["pt_id"], []).append((r["rank"], r["fp_id"], r["dist2"]))
+    assert set(by_pt) == {pid for pid, _, _ in pts}
     cent = {fid: ((mnx + mxx) / 2, (mny + mxy) / 2) for fid, _, mnx, mny, mxx, mxy in polys}
     for pid, px, py in pts:
         exp = sorted(
@@ -131,30 +140,6 @@ def test_knn_more_than_available(spark, geo):
     )
     got = joins.knn_join(pdf.limit(10), centers, GRID, k=5, r0=1)
     assert got.groupBy("pt_id").count().agg(F.max("count")).first()[0] == 2
-
-
-def test_knn_explode_side_identical_results(spark, geo):
-    """explode_side only moves the k-ring explode between join sides
-    (BENCH.md shuffle-volume study); the ranked result set must be
-    byte-identical for every setting, and unknown settings must raise."""
-    pts, polys, pdf, gdf = geo
-    centers = spark.createDataFrame(
-        [(fid, (mnx + mxx) / 2, (mny + mxy) / 2) for fid, _, mnx, mny, mxx, mxy in polys],
-        "fp_id string, cx double, cy double",
-    )
-    key = lambda r: (r["pt_id"], r["rank"], r["fp_id"], r["dist2"])
-    base = sorted(
-        joins.knn_join(pdf, centers, GRID, k=3, r0=1, explode_side="auto").collect(),
-        key=key,
-    )
-    for side in ("build", "probe"):
-        got = sorted(
-            joins.knn_join(pdf, centers, GRID, k=3, r0=1, explode_side=side).collect(),
-            key=key,
-        )
-        assert [key(r) for r in got] == [key(r) for r in base], side
-    with pytest.raises(ValueError):
-        joins.knn_join(pdf, centers, GRID, k=3, explode_side="left")
 
 
 def test_cellindex_properties(spark):

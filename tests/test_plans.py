@@ -65,15 +65,13 @@ def test_pip_join_broadcast_engages(spark):
         ),
         "fp_id",
     )
-    bcast = joins.pip_join(
-        pts, polys, WORLD_GRID, strategy="expr", broadcast_polygons=True
-    )
+    bcast = joins.pip_join(pts, polys, WORLD_GRID, broadcast_polygons=True)
     assert "BroadcastHashJoin" in plan(bcast)
     # the default path is the shuffle join (auto-broadcast only kicks in
     # because this fixture is tiny — disable it to see the scale plan)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        shuffle = joins.pip_join(pts, polys, WORLD_GRID, strategy="expr")
+        shuffle = joins.pip_join(pts, polys, WORLD_GRID)
         assert "hashpartitioning(cell_id" in plan(shuffle)
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")

@@ -45,19 +45,17 @@ def test_tiling_invariants(size, t, ov):
 @settings(max_examples=25, deadline=None)
 @given(st.integers(min_value=0, max_value=10_000))
 def test_pip_raycast_vs_winding_bruteforce(seed):
-    """Random concave polygons + points: numpy ray-cast == scalar even-odd."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators.joins import (
-        _ray_cast_numpy,
-    )
-
+    """Random concave polygons over a random point grid: the numpy
+    ray-cast (kernels_vector.pip_grid) == scalar even-odd."""
     rng = np.random.RandomState(seed)
     ang = np.sort(rng.uniform(0, 2 * np.pi, rng.randint(3, 9)))
     rad = rng.uniform(0.5, 3.0, len(ang))
     ring = [[5 + r * np.cos(a), 5 + r * np.sin(a)] for a, r in zip(ang, rad)]
-    ring.append(ring[0])
-    pts = rng.uniform(0, 10, size=(50, 2))
+    px, py = rng.uniform(0, 10, 12), rng.uniform(0, 10, 10)
 
-    got = _ray_cast_numpy(pts[:, 0], pts[:, 1], [ring] * len(pts))
+    xs, ys = zip(*ring)  # pip_grid closes the ring implicitly
+    got = kv.pip_grid(xs, ys, px, py)
+    ring.append(ring[0])
 
     def scalar(px, py):
         inside = False
@@ -66,7 +64,7 @@ def test_pip_raycast_vs_winding_bruteforce(seed):
                 inside = not inside
         return inside
 
-    exp = np.array([scalar(x, y) for x, y in pts])
+    exp = np.array([[scalar(x, y) for x in px] for y in py])
     np.testing.assert_array_equal(got, exp)
 
 

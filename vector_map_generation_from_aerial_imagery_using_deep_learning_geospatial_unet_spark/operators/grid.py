@@ -137,7 +137,7 @@ counts AS (
   FROM {src}
 ),
 rows_y AS (
-  SELECT *, unnest(generate_series(1, ny)) AS tiy FROM counts
+  SELECT *, CAST(unnest(generate_series(1, ny)) AS INT) AS tiy FROM counts
 ),
 tiles AS (
   SELECT *,
@@ -151,7 +151,7 @@ tiles AS (
       '_',
       lpad(CAST(tix AS VARCHAR), CAST(length(CAST(greatest(nx, ny) AS VARCHAR)) AS INT), '0')
     ) AS tile_id
-  FROM (SELECT *, unnest(generate_series(1, nx)) AS tix FROM rows_y)
+  FROM (SELECT *, CAST(unnest(generate_series(1, nx)) AS INT) AS tix FROM rows_y)
 )"""
 
 

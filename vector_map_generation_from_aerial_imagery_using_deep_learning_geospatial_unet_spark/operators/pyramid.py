@@ -50,7 +50,7 @@ def pyramid_meta_sql(levels: int) -> str:
 lvl AS (
   SELECT im.*, l.level
   FROM images_meta im,
-       (SELECT unnest(generate_series(0, {levels})) AS level) l
+       (SELECT CAST(unnest(generate_series(0, {levels})) AS INT) AS level) l
 ),
 pyramid AS (
   SELECT image_id, w, h, ulx, uly, level,
@@ -120,7 +120,7 @@ def multires_meta_sql(cfg: EngineConfig = DEFAULT_CONFIG) -> str:
 res AS (
   SELECT im.*, r.res_idx, r.res_idx * 1e-1 AS resolution
   FROM images_meta im,
-       (SELECT unnest(generate_series(1, 10)) AS res_idx) r
+       (SELECT CAST(unnest(generate_series(1, 10)) AS INT) AS res_idx) r
 ),
 multires AS (
   SELECT image_id, w, h, ulx, uly, res_idx, resolution,

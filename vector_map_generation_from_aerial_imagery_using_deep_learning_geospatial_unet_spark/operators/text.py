@@ -346,8 +346,8 @@ TEXT_STATS_SQL = (
     + f""",
 t AS (SELECT cid, string_split(text, ' ') AS toks FROM corpus)
 SELECT cid,
-  len(toks) AS n_tokens,
-  len(list_distinct(toks)) AS n_distinct_tokens,
+  CAST(len(toks) AS INT) AS n_tokens,
+  CAST(len(list_distinct(toks)) AS INT) AS n_distinct_tokens,
   CAST(list_sum(list_transform(toks, x -> length(x))) AS DOUBLE) / len(toks) AS avg_token_len,
   CAST(len(list_filter(toks, x -> x IN {STOPWORDS!r})) AS DOUBLE) / len(toks) AS stopword_ratio,
   CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks) AS distinct_ratio
